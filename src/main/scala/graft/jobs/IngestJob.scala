@@ -1,13 +1,18 @@
 package graft.jobs
 
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.atomic.AtomicReference
+
 import graft.api.{DumpInList, Manifest}
-import graft.ingest.{Merge, TsvReader, Volatile}
+import graft.ingest.{BucketedMerge, Merge, StagedWrite, TsvReader, Volatile}
 import graft.keys.KeyInference
 import graft.schema.{SchemaDefinition, TableDefinition}
 import graft.sinks.JdbcSink
 import graft.state.IngestState
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.slf4j.LoggerFactory
 
 /** A relational load target — the reference's actual sink
   * (`db_client.rs`): JDBC url + dialect + connection properties. */
@@ -40,7 +45,21 @@ object JdbcTarget {
  * Differences by design (SURVEY §4): one cached schema (not one HTTP fetch
  * per file); set-based merge (not 2 round-trips per row); order-independent
  * `(pk, dump_seq)` dedup (enables parallel backfill); streaming decompress
- * inside the scan (never a whole file on the driver).
+ * inside the scan (never a whole file on the driver); one ledger read per
+ * run (not one state lookup per listed dump); each table's TSV is parsed
+ * once per load, however many consumers its batch has.
+ *
+ * Concurrency: the tables of ONE dump load at the same time, on a driver
+ * pool of `min(tables, defaultParallelism)` threads — the counterpart of
+ * the reference's rayon per-file import (`importer.rs:230-237`), and it
+ * overlaps one table's driver-side work (staging swaps, JDBC statements)
+ * with another's Spark jobs. Dumps stay strictly sequential: the JDBC
+ * staged merge is last-writer-wins by arrival order and does not look at
+ * `_dump_seq`, so two dumps of one table must never race. Fail-fast (X-3)
+ * holds per dump: the first failing table cancels its siblings' running
+ * jobs, the run waits for every sibling to stop, marks the dump `failure`
+ * and rethrows that first error with the others suppressed; later dumps
+ * are not attempted.
  */
 final class IngestJob(
     spark: SparkSession,
@@ -51,15 +70,27 @@ final class IngestJob(
     allVolatile: Boolean = false,
     jdbc: Option[JdbcTarget] = None) {
 
+  private val log = LoggerFactory.getLogger(classOf[IngestJob])
+
   /** Load one table's files of one dump into the warehouse (and, when a
     * [[JdbcTarget]] is configured, into the RDBMS — the reference's
     * actual sink, same dump ordering semantics: dumps replay in sequence
-    * order and the staged merge is last-writer-wins per PK). */
+    * order and the staged merge is last-writer-wins per PK), then return
+    * the loaded table. [[run]] loads without the read-back. */
   def loadTable(
       table: TableDefinition,
       files: Seq[String],
       dumpSeq: Long,
       forceVolatile: Boolean = false): DataFrame = {
+    load(table, files, dumpSeq, forceVolatile)
+    BucketedMerge.read(spark, s"$warehouseDir/${table.tableName}")
+  }
+
+  private def load(
+      table: TableDefinition,
+      files: Seq[String],
+      dumpSeq: Long,
+      forceVolatile: Boolean): Unit = {
     val batchRaw = TsvReader.read(spark, files, table)
       .withColumn("_dump_seq", lit(dumpSeq))
     val name = table.tableName
@@ -69,31 +100,42 @@ final class IngestJob(
     // the relational sink receives exactly the schema's columns
     def dataCols(df: DataFrame): DataFrame =
       df.select(table.columns.map(c => col(c.name)).toIndexedSeq: _*)
+    val asVolatile = volatileLoad || pkOpt.isEmpty
+    val t0 = System.nanoTime()
 
-    if (volatileLoad || pkOpt.isEmpty) {
+    if (asVolatile) {
       // reference errors when no PK can be inferred for a non-volatile
       // table (`importer.rs:349-356`); we degrade to volatile semantics for
-      // robustness but keep the signal in logs.
-      graft.ingest.StagedWrite.overwriteFlat(spark, Merge.applyVolatile(batchRaw), targetPath)
+      // robustness and say so in the log.
+      if (!volatileLoad)
+        log.warn(s"table=$name dump_seq=$dumpSeq: no id-like primary key; " +
+          "loading with volatile (drop and reload) semantics instead of a merge")
+      StagedWrite.overwriteFlat(spark, Merge.applyVolatile(batchRaw), targetPath)
+      // the sink reads the table just written, not the gz a second time;
+      // the declared schema skips parquet's footer-inference job
       jdbc.foreach { t =>
-        JdbcSink.writeBatch(dataCols(batchRaw), t.url,
+        val written = spark.read.schema(batchRaw.schema).parquet(targetPath)
+        JdbcSink.writeBatch(dataCols(written), t.url,
           t.dialect.ident(name), t.props, overwrite = true)
       }
-      spark.read.parquet(targetPath)
     } else {
       // incremental path: bucket-pruned merge — only partitions whose PK
       // hash-bucket appears in the batch are read + rewritten. Existence /
       // layout probing and fail-fast on unreadable-but-existing targets
-      // (X-3) live inside BucketedMerge.
+      // (X-3) live inside BucketedMerge. The deduped batch is pinned, so
+      // the bucket probe, the merge and the JDBC stage share one scan.
       val pk = pkOpt.get
       val batch = Merge.dedupLatest(batchRaw, Seq(pk), "_dump_seq")
-      graft.ingest.BucketedMerge.mergeInto(
-        spark, targetPath, batch, Seq(pk), seqCol = Some("_dump_seq"))
-      jdbc.foreach { t =>
-        JdbcSink.mergeBatch(dataCols(batch), t.url, table, t.dialect, t.props)
-      }
-      graft.ingest.BucketedMerge.read(spark, targetPath)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        BucketedMerge.mergeInto(spark, targetPath, batch, Seq(pk), seqCol = Some("_dump_seq"))
+        jdbc.foreach { t =>
+          JdbcSink.mergeBatch(dataCols(batch), t.url, table, t.dialect, t.props)
+        }
+      } finally batch.unpersist()
     }
+    log.info(f"table=$name dump_seq=$dumpSeq: loaded ${if (asVolatile) "volatile" else "incremental"}" +
+      f" from ${files.size}%d file(s) in ${(System.nanoTime() - t0) / 1e9}%.2f s")
   }
 
   /**
@@ -106,16 +148,21 @@ final class IngestJob(
       dumpFiles: String => Map[String, Seq[String]],
       onlyLoadFinal: Boolean = false): Unit = {
     val latest = schema.version
-    val processed = dumps.map(_.dumpId).filter(state.alreadyProcessed).toSet
+    // one ledger read serves the F-2 skip set and the version check
+    val ledger = state.snapshot()
+    val processed = dumps.map(_.dumpId).filter(IngestState.alreadyProcessed(ledger, _)).toSet
     val (selected, outOfDate) = Manifest.selectDumps(
       Manifest.dumpsDF(spark, dumps), processed, latest, onlyLoadFinal)
-    outOfDate.collect().foreach(r =>
-      state.setDumpStatus(r.getString(0), IngestState.OutOfDate))
+    outOfDate.collect().map(_.getString(0)).distinct.foreach(id =>
+      state.setDumpStatus(id, IngestState.OutOfDate))
 
     // schema-version change forces a full rebuild (main.rs:188-193)
-    val versionChanged = state.lastVersionProcessed.exists(_ != latest)
+    val versionChanged = ledger.get(IngestState.LastVersionKey).exists(_ != latest)
 
-    val toProcess = selected.collect().map(r => r.getAs[String]("dumpId"))
+    // a dump listed twice (a re-delivery before its first copy loaded)
+    // loads once, at its earliest position — the reference re-checks its
+    // KV store inside the loop and skips the second copy
+    val toProcess = selected.collect().map(r => r.getAs[String]("dumpId")).distinct
     toProcess.foreach { dumpId =>
       val files = dumpFiles(dumpId)
       val historical = Manifest.isHistoricalRefresh(
@@ -126,13 +173,9 @@ final class IngestJob(
         state.setDumpStatus(dumpId, IngestState.Successful)
       } else {
         state.setDumpStatus(dumpId, IngestState.InProgress)
+        val seq = dumps.find(_.dumpId == dumpId).map(_.sequence).getOrElse(0L)
         try {
-          val seq = dumps.find(_.dumpId == dumpId).map(_.sequence).getOrElse(0L)
-          files.foreach { case (tableName, tableFiles) =>
-            schema.tableDefinition(tableName).foreach { td =>
-              loadTable(td, tableFiles, seq, forceVolatile = versionChanged)
-            }
-          }
+          loadDump(dumpId, seq, files, forceVolatile = versionChanged)
           state.setDumpStatus(dumpId, IngestState.Successful)
         } catch {
           case e: Throwable =>
@@ -142,5 +185,51 @@ final class IngestJob(
       }
     }
     state.setLastVersionProcessed(latest)
+  }
+
+  /** Load every known table of one dump concurrently (see the class doc).
+    * Returns once every table has stopped; throws the first failure with
+    * the later ones suppressed. */
+  private def loadDump(
+      dumpId: String,
+      seq: Long,
+      files: Map[String, Seq[String]],
+      forceVolatile: Boolean): Unit = {
+    // largest input first, so the longest load never starts last
+    val loads = files.toSeq
+      .flatMap { case (t, fs) => schema.tableDefinition(t).map(_ -> fs) }
+      .sortBy { case (_, fs) => -fs.map(f => new java.io.File(f).length).sum }
+    if (loads.isEmpty) return
+    val sc = spark.sparkContext
+    // not built from the dump id: Spark rejects a job tag with a comma
+    val tag = s"graft-ingest-${java.util.UUID.randomUUID()}"
+    val first = new AtomicReference[Throwable]()
+    val later = new ConcurrentLinkedQueue[Throwable]()
+    val pool = Executors.newFixedThreadPool(math.min(loads.size, math.max(1, sc.defaultParallelism)))
+    def loadOne(td: TableDefinition, fs: Seq[String]): Unit =
+      if (first.get == null) { // a sibling already failed: do not start
+        sc.addJobTag(tag)
+        try load(td, fs, seq, forceVolatile)
+        catch {
+          case e: Throwable =>
+            val name = td.tableName
+            if (first.compareAndSet(null, e)) {
+              log.error(s"table=$name dump=$dumpId dump_seq=$seq failed; cancelling its sibling tables", e)
+              sc.cancelJobsWithTag(tag, s"table $name of dump $dumpId failed")
+            } else {
+              log.warn(s"table=$name dump=$dumpId dump_seq=$seq stopped after a sibling failed: ${e.getMessage}")
+              later.add(e)
+            }
+        } finally sc.removeJobTag(tag)
+      }
+    try {
+      loads
+        .map { case (td, fs) => pool.submit(new Callable[Unit] { def call(): Unit = loadOne(td, fs) }) }
+        .foreach(_.get())
+    } finally pool.shutdown()
+    Option(first.get).foreach { e =>
+      later.forEach(s => e.addSuppressed(s))
+      throw e
+    }
   }
 }

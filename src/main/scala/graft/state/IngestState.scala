@@ -3,8 +3,9 @@ package graft.state
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /**
  * Processed-dump state machine, replacing the reference's RocksDB KV
@@ -40,21 +41,23 @@ final class IngestState(spark: SparkSession, dir: String) {
   private def fs: FileSystem =
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
-  private def readAll(): DataFrame = {
-    import spark.implicits._
-    if (fs.exists(new Path(path))) spark.read.parquet(path)
-    else Seq.empty[(String, String, Long)].toDF("key", "value", "seq")
-  }
+  /** The declared ledger schema: reading with it skips parquet's
+    * footer-inference job, and an existing-but-empty directory reads as
+    * an empty ledger. */
+  private def readAll(): DataFrame =
+    if (fs.exists(new Path(path))) spark.read.schema(LedgerSchema).parquet(path)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), LedgerSchema)
 
-  /** Latest value per key (last writer wins by monotonic seq). */
-  def snapshot(): Map[String, String] = {
-    val df = readAll()
-    df.groupBy(col("key"))
-      .agg(max_by(col("value"), col("seq")).as("value"))
-      .collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .toMap
-  }
+  /** Latest value per key (last writer wins by monotonic seq), as ONE
+    * Spark job: the log is bounded by compaction to one row per key plus
+    * at most `CompactThreshold` appended parts, so it is folded on the
+    * driver instead of through a shuffle. Callers that need several facts
+    * of one run (the F-2 skip set, the last schema version) read it once
+    * and query the map. */
+  def snapshot(): Map[String, String] =
+    readAll().collect()
+      .groupBy(_.getString(0))
+      .map { case (k, rows) => k -> rows.maxBy(_.getLong(2)).getString(1) }
 
   def get(key: String): Option[String] = snapshot().get(key)
 
@@ -93,18 +96,20 @@ final class IngestState(spark: SparkSession, dir: String) {
       fs.delete(new Path(tmp), true)
     }
 
-  def dumpStatus(dumpId: String): Option[String] = get(s"dump_processed_$dumpId")
+  def dumpStatus(dumpId: String): Option[String] = get(dumpKey(dumpId))
   def setDumpStatus(dumpId: String, status: String): Unit = {
     require(Statuses.contains(status), s"illegal status $status")
-    put(s"dump_processed_$dumpId", status)
+    put(dumpKey(dumpId), status)
   }
 
   def lastVersionProcessed: Option[String] = get(LastVersionKey)
   def setLastVersionProcessed(v: String): Unit = put(LastVersionKey, v)
 
-  /** The skip predicate of op F-2 (`main.rs:118-138`). */
+  /** The skip predicate of op F-2 (`main.rs:118-138`); one ledger read per
+    * call — a run over a whole listing uses [[IngestState.alreadyProcessed]]
+    * on one [[snapshot]] instead. */
   def alreadyProcessed(dumpId: String): Boolean =
-    dumpStatus(dumpId).exists(s => s == Successful || s == OutOfDate)
+    IngestState.alreadyProcessed(snapshot(), dumpId)
 }
 
 object IngestState {
@@ -115,4 +120,14 @@ object IngestState {
   val Statuses: Set[String] = Set(InProgress, Successful, Failure, OutOfDate)
   val LastVersionKey = "last_version_processed"
   val CompactThreshold = 16
+
+  val LedgerSchema: StructType = StructType(Seq(
+    StructField("key", StringType), StructField("value", StringType), StructField("seq", LongType)))
+
+  def dumpKey(dumpId: String): String = s"dump_processed_$dumpId"
+
+  /** Op F-2 over a [[IngestState.snapshot]]: successful and out-of-date
+    * dumps are skipped; in-progress and failed ones are retried. */
+  def alreadyProcessed(snapshot: Map[String, String], dumpId: String): Boolean =
+    snapshot.get(dumpKey(dumpId)).exists(s => s == Successful || s == OutOfDate)
 }

@@ -20,6 +20,12 @@ object GraftBridge {
   def waitListenerBusEmpty(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** The operation-scope names of a stage's RDDs ("Scan csv", "Exchange",
+    * ...; `RDDOperationScope` is private[spark]) — how a listener tells a
+    * stage that parses source files from one that reads a cache. */
+  def rddScopeNames(info: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    info.rddInfos.flatMap(_.scope.map(_.name)).toSeq
+
   /**
    * Pin lifecycle. Every [[checkpointNoStats]] persists its RDD
    * (`localCheckpoint` defaults to MEMORY_AND_DISK) and, before round 15,

@@ -4,12 +4,21 @@ import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter}
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
 import graft.api.DumpInList
-import graft.ingest.TsvReader
-import graft.jobs.IngestJob
+import graft.config.DatabaseType
+import graft.ingest.{BucketedMerge, TsvReader}
+import graft.jobs.{IngestJob, JdbcTarget}
 import graft.schema.CanvasSchema
 import graft.state.IngestState
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.collection.mutable
 
 /**
  * Ingest end-to-end over synthetic Canvas dump fixtures (FIXTURES.md §B):
@@ -232,6 +241,136 @@ class IngestJobSpec extends AnyFunSuite with SparkSuite {
     }
     // the corrupt target is untouched — no staging rename happened
     assert(new File(target, "part-00000.parquet").exists())
+  }
+
+  /** Run `body` with `listener` registered; events are drained before
+    * the listener is removed, so counters are complete on return. */
+  private def listening(listener: SparkListener)(body: => Unit): Unit = {
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftBridge.waitListenerBusEmpty(spark, 30000L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Jobs whose call site runs through a frame of `cls`. A SQL execution
+    * carries the stack of the thread that started it; its jobs may run on
+    * other threads, so they are matched by execution id. */
+  private def jobsThrough(cls: String)(body: => Unit): Int = {
+    val execSites = new ConcurrentHashMap[Long, String]()
+    val n = new AtomicInteger(0)
+    listening(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execSites.put(s.executionId, s.details)
+        case _                                 => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val site = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSites.get(id.toLong)))
+          .getOrElse(j.stageInfos.map(_.details).mkString("\n"))
+        if (site.contains(s"$cls.")) n.incrementAndGet()
+      }
+    })(body)
+    n.get
+  }
+
+  test("ledger reads per run do not grow with the listing (one snapshot per run)") {
+    val schema = CanvasSchema.fromJson(schemaJson)
+    def ledgerJobs(listed: Int): Int = {
+      val root = TempDirs.tempDir("graft_ledger_jobs").toFile
+      val state = new IngestState(spark, s"$root/state")
+      val dumps = (1 to listed).map(i =>
+        DumpInList(f"done$i%02d", i.toLong, 1, finished = true, f"2024-01-$i%02dT00:00:00Z", "1.0.0"))
+      dumps.foreach(d => state.setDumpStatus(d.dumpId, IngestState.Successful))
+      val job = new IngestJob(spark, schema, s"$root/wh", state)
+      jobsThrough("graft.state.IngestState") {
+        job.run(dumps, id => fail(s"processed dump $id must not be fetched"))
+      }
+    }
+    val two = ledgerJobs(2)
+    val twelve = ledgerJobs(12)
+    assert(two == twelve, s"ledger jobs grew with the listing: 2 dumps -> $two, 12 dumps -> $twelve")
+    assert(two <= 2, s"expected one ledger read and one version write, saw $two ledger jobs")
+  }
+
+  test("an incremental load parses its TSV once: bucket probe, merge and JDBC stage share one scan") {
+    System.setProperty("derby.system.home", TempDirs.tempDir("derby_home").toString)
+    val root = TempDirs.tempDir("graft_one_scan").toFile
+    val schema = CanvasSchema.fromJson(schemaJson)
+    val users = schema.tables("user_dim")
+    val job = new IngestJob(spark, schema, s"$root/wh", new IngestState(spark, s"$root/state"),
+      jdbc = Some(JdbcTarget.forUrl("jdbc:derby:memory:ingest_one_scan;create=true", DatabaseType.Psql)))
+    // the first load creates the bucketed target, so the second takes the
+    // hourly path: probe the affected buckets, merge them, stage to JDBC
+    job.loadTable(users, Seq(gz(new File(root, "user_dim-00000-aa.gz"),
+      (1 to 200).map(i => s"$i\tuser_$i\t2024-01-01 00:00:00\tnormal"))), dumpSeq = 1)
+    val delta = (150 to 260).map(i => s"$i\tuser_${i}_v2\t2024-02-01 00:00:00\thidden")
+    val deltaFile = gz(new File(root, "user_dim-00000-bb.gz"), delta)
+
+    val tsvRecords = new AtomicLong(0)
+    listening(new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (GraftBridge.rddScopeNames(s.stageInfo).exists(_.toLowerCase.contains("csv")))
+          tsvRecords.addAndGet(s.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }) {
+      job.loadTable(users, Seq(deltaFile), dumpSeq = 2)
+    }
+    assert(tsvRecords.get == delta.size,
+      s"${delta.size} delta rows, but the TSV stages read ${tsvRecords.get} records")
+    import spark.implicits._
+    assert(BucketedMerge.read(spark, s"$root/wh/user_dim").select("id").as[Long].collect().toSet ==
+      (1L to 260L).toSet)
+  }
+
+  test("a failing table fails its dump: siblings stop, the ledger records it, a fixed replay converges") {
+    val schema = CanvasSchema.fromJson(schemaJson)
+    val src = TempDirs.tempDir("graft_fail_src").toFile
+    val dumps = Seq(
+      DumpInList("dump1", 1, 2, finished = true, "2024-01-02T00:00:00Z", "1.0.0"),
+      DumpInList("dump2", 2, 2, finished = true, "2024-02-02T00:00:00Z", "1.0.0"),
+      DumpInList("dump3", 3, 2, finished = true, "2024-03-02T00:00:00Z", "1.0.0"))
+    val users = (1 to 3).map(d => gz(new File(src, s"user_dim-00000-d$d.gz"),
+      (1 to 400).map(i => s"${i * d}\tuser_${i}_d$d\t2024-0$d-01 00:00:00\tnormal")))
+    val goodQuiz2 = Seq("20\tsecond quiz", "21\tanother quiz")
+    val quizzes = Seq(
+      gz(new File(src, "quiz_dim-00000-d1.gz"), Seq("10\tfirst quiz")),
+      // FAILFAST: a row with a column too many is malformed
+      gz(new File(src, "quiz_dim-00000-d2.gz"), Seq("20\tsecond quiz", "21\tanother quiz\tstray column")),
+      gz(new File(src, "quiz_dim-00000-d3.gz"), Seq("30\tthird quiz")))
+    val fetched = mutable.Buffer.empty[String]
+    def files(id: String): Map[String, Seq[String]] = {
+      fetched += id
+      val d = id.last.asDigit - 1
+      Map("user_dim" -> Seq(users(d)), "quiz_dim" -> Seq(quizzes(d)))
+    }
+
+    val root = TempDirs.tempDir("graft_fail").toFile
+    val state = new IngestState(spark, s"$root/state")
+    val job = new IngestJob(spark, schema, s"$root/wh", state)
+    val err = intercept[Throwable](job.run(dumps, files))
+    val chain = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("FAILFAST")),
+      s"expected the malformed quiz_dim row's error, got $err")
+    assert(state.dumpStatus("dump1").contains(IngestState.Successful))
+    assert(state.dumpStatus("dump2").contains(IngestState.Failure))
+    assert(state.dumpStatus("dump3").isEmpty)
+    assert(fetched == Seq("dump1", "dump2"), "dump 3's manifest must never be fetched")
+    GraftBridge.waitListenerBusEmpty(spark, 30000L)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a sibling table's job outlived the failed run")
+
+    // fix the file and replay: dump 1 is skipped, dumps 2 and 3 load
+    gz(new File(quizzes(1)), goodQuiz2)
+    job.run(dumps, files)
+    dumps.foreach(d => assert(state.dumpStatus(d.dumpId).contains(IngestState.Successful)))
+
+    val clean = TempDirs.tempDir("graft_fail_clean").toFile
+    new IngestJob(spark, schema, s"$clean/wh", new IngestState(spark, s"$clean/state")).run(dumps, files)
+    Seq("user_dim", "quiz_dim").foreach { t =>
+      def rows(wh: String) = BucketedMerge.read(spark, s"$wh/$t").collect().map(_.toString).sorted.toSeq
+      assert(rows(s"$root/wh") == rows(s"$clean/wh"), s"$t: the replay diverged from a clean run")
+    }
   }
 
   test("TsvReader: \\N decodes to typed NULL, values keep quotes (I-6 divergence)") {

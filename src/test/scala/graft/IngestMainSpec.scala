@@ -216,4 +216,46 @@ class IngestMainSpec extends AnyFunSuite with SparkSuite {
     assert(state.dumpStatus("dumpH").contains(IngestState.Successful))
     assert(!new java.io.File(s"$root/warehouse/requests").exists())
   }
+
+  test("a dump listed twice in one listing loads once (re-delivery before its first load)") {
+    val root = TempDirs.tempDir("graft_main_dup").toString
+    val gz = FakeTransport.gzBytes _
+    // dump1 arrives again, later, before either copy was loaded
+    val listing =
+      """[
+        | {"dumpId":"dump1","sequence":1,"accountId":"self","numFiles":2,"finished":true,
+        |  "expires":0,"updatedAt":"2024-01-02T00:00:00Z","createdAt":"2024-01-02T00:00:00Z",
+        |  "schemaVersion":"1.0.0"},
+        | {"dumpId":"dump1","sequence":1,"accountId":"self","numFiles":2,"finished":true,
+        |  "expires":0,"updatedAt":"2024-01-05T00:00:00Z","createdAt":"2024-01-05T00:00:00Z",
+        |  "schemaVersion":"1.0.0"}
+        |]""".stripMargin
+    val routes = Map(
+      s"$base/api/account/self/dump" -> listing.getBytes("UTF-8"),
+      s"$base/api/schema/latest" -> schemaJson.getBytes("UTF-8"),
+      s"$base/api/account/self/file/byDump/dump1" ->
+        filesJson("dump1", 1, Map(
+          "user_dim" -> Seq("user_dim-00000-aa.gz"),
+          "quiz_dim" -> Seq("quiz_dim-00000-aa.gz"))).getBytes("UTF-8"),
+      s"$base/files/dump1/user_dim-00000-aa.gz" -> gz(Seq("1\talice", "2\tbob")),
+      s"$base/files/dump1/quiz_dim-00000-aa.gz" -> gz(Seq("10\tfirst quiz")))
+    val transport = new FakeTransport(routes)
+    val settings = Settings.fromMap(Map(
+      "save_location" -> s"$root/save",
+      "rocksdb_location" -> s"$root/state",
+      "database.url" -> s"$root/warehouse",
+      "canvasdataauth.api_key" -> "k",
+      "canvasdataauth.api_secret" -> "s",
+      "api_base_url" -> base))
+
+    IngestMain.run(spark, settings, transport)
+
+    val manifestFetches = transport.requests.map(_._1).count(_.endsWith("/file/byDump/dump1"))
+    assert(manifestFetches == 1, s"dump1's manifest was fetched $manifestFetches times")
+    val state = new IngestState(spark, s"$root/state")
+    assert(state.dumpStatus("dump1").contains(IngestState.Successful))
+    import spark.implicits._
+    assert(spark.read.parquet(s"$root/warehouse/user_dim")
+      .select("id", "name").as[(Long, String)].collect().toSet == Set((1L, "alice"), (2L, "bob")))
+  }
 }
