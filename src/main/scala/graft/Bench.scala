@@ -31,8 +31,6 @@ import org.apache.spark.sql.SparkSession
  * deltas emitted in the JSON tail attribute it. Codegen cache is raised
  * from the 100-entry default so sweeps 2..N reuse sweep 1's generated
  * classes instead of recompiling the whole battery each sweep.
- * SPARK_GRAFT_BENCH_ORDER=query restores the legacy ordering for A/B
- * attribution.
  *
  * Attribution instrumentation (round 17, for the driver's independent
  * window): the tail summary carries, aligned with `top20`'s key order,
@@ -67,20 +65,9 @@ object Bench {
       sys.exit(2) // a typo must not pass as an empty-but-green benchmark
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a full 169-query sweep generates far
-      // more classes than that, and sweep-major passes would recompile
-      // the whole battery every sweep without this
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, "bench")
     var anyFailed = false
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -159,15 +146,13 @@ object Bench {
     // pins once its action returns — before this, a full battery accreted
     // hundreds of dead localCheckpoint block sets in the one JVM and the
     // cost landed on the late battery (r14: q70 13.2× / q71 6.4× over
-    // minima). SPARK_GRAFT_RELEASE_PINS=0 restores the old behavior for
-    // A/B attribution; SPARK_GRAFT_BENCH_DEBUG=1 reports per-query pin and
+    // minima). SPARK_GRAFT_BENCH_DEBUG=1 reports per-query pin and
     // storage counts on stderr.
-    val releasePins = !sys.env.get("SPARK_GRAFT_RELEASE_PINS").contains("0")
     val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
     selected.headOption.foreach { case (_, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case scala.util.control.NonFatal(_) => () }
-      if (releasePins) org.apache.spark.sql.GraftBridge.releaseTransientPins()
+      org.apache.spark.sql.GraftBridge.releaseTransientPins()
     }
     def gcMsNow(): Long = {
       import scala.jdk.CollectionConverters._
@@ -206,29 +191,21 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      if (releasePins) org.apache.spark.sql.GraftBridge.releaseTransientPins()
+      org.apache.spark.sql.GraftBridge.releaseTransientPins()
       heapMbMax = math.max(heapMbMax, (java.lang.Runtime.getRuntime.totalMemory() -
         java.lang.Runtime.getRuntime.freeMemory()) / 1e6)
       Pass(dt, at, gcMsNow() - g0)
     }
-    val sweepMajor = !sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("query")
-    val passesByName: Map[String, Seq[Pass]] =
-      if (sweepMajor) {
-        val acc = scala.collection.mutable.Map.empty[String, Vector[Pass]]
-        (1 to runs).foreach { r =>
-          selected.foreach { case (name, fn) =>
-            acc(name) = acc.getOrElse(name, Vector.empty) :+ onePass(name, fn)
-            storageReport(s"$name sweep$r")
-          }
+    val passesByName: Map[String, Seq[Pass]] = {
+      val acc = scala.collection.mutable.Map.empty[String, Vector[Pass]]
+      (1 to runs).foreach { r =>
+        selected.foreach { case (name, fn) =>
+          acc(name) = acc.getOrElse(name, Vector.empty) :+ onePass(name, fn)
+          storageReport(s"$name sweep$r")
         }
-        acc.toMap
-      } else {
-        selected.map { case (name, fn) =>
-          val ps = (1 to runs).map(_ => onePass(name, fn))
-          storageReport(name)
-          name -> (ps: Seq[Pass])
-        }.toMap
       }
+      acc.toMap
+    }
     // per-sweep battery totals + GC totals: a host stall shows up as ONE
     // inflated sweep with flat GC; heap pressure shows up as GC growth
     val sweepTotals = (0 until runs).map(i =>
@@ -249,7 +226,7 @@ object Bench {
     val total = results.map(_._2._1).sum
     val fx = fixpoints.collect { case (k, Some(t)) => "\"" + k + "\":" + f"$t%.3f" }
       .mkString("{", ",", "}")
-    val order = if (sweepMajor) "sweep" else "query"
+    val order = "sweep"
     val sweepsJson = sweepTotals.map(t => f"$t%.2f").mkString("[", ",", "]")
     val sweepsGcJson = sweepGcMs.mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"cpus":$cpus,"order":"$order","sweep_totals":$sweepsJson,"gc_ms_sweeps":$sweepsGcJson,"heap_mb_max":${heapMbMax.round},"fixpoints":$fx,"queries":$qs,"spread":$sp,"sf":"$sfDir"}"""
@@ -278,7 +255,9 @@ object Bench {
     // the same minima file, and 8-core minima are LOWER for the
     // overhead-floored queries at sf0.1 — the r19 trust record absorbed
     // 73.29 s of cross-core-count minima vs the clean 32-core 80.25 s.
-    // A run at a non-default core count neither merges into nor
+    // `cpus` is the count the session really ran on (LocalSession.cpus:
+    // SPARK_GRAFT_CPUS, else the host's processors), so a run on any
+    // other core count than 32 neither merges into nor
     // overwrites BENCH_SELF.json (an explicit SPARK_GRAFT_BENCH_SELF
     // target is still honored — the caller takes responsibility — but
     // the cpus stamp in the record refuses cross-core merges either way).
@@ -287,7 +266,7 @@ object Bench {
       System.err.println("[bench] failures above — NOT writing the self-record")
     } else if (only.isEmpty &&
         (selfTarget.isDefined ||
-          (cpus == "32" && sfDir.stripSuffix("/").endsWith("sf0.1")))) {
+          (cpus == 32 && sfDir.stripSuffix("/").endsWith("sf0.1")))) {
       val out = selfTarget.getOrElse("BENCH_SELF.json")
       // whitespace-tolerant: a pretty-printed record (e.g. a hand or tool
       // rewrite with "field": {) must merge, not silently start a fresh
@@ -312,7 +291,7 @@ object Bench {
           // same scale AND same core count only: a record without a cpus
           // stamp predates the r20 keying and is treated as 32-core
           val oldCpus = "\"cpus\":\\s*\"?(\\d+)".r.findFirstMatchIn(old)
-            .map(_.group(1)).getOrElse("32")
+            .map(_.group(1).toInt).getOrElse(32)
           if ((old.contains("\"sf0.1\"") || old.contains("sf0.1\"")) &&
               oldCpus == cpus) {
             val w = "\"windows\":\\s*(\\d+)".r.findFirstMatchIn(old)
@@ -366,10 +345,9 @@ object Bench {
       }
     } else if (only.isEmpty && !anyFailed &&
         sfDir.stripSuffix("/").endsWith("sf0.1")) {
-      // non-default core count at the bench scale (the driver's scaling
-      // pass): keep the untruncated window evidence under a core-count-
-      // suffixed name so it can't be mistaken for (or clobber) the
-      // 32-core record
+      // any other core count at the bench scale: keep the untruncated
+      // window evidence under a core-count-suffixed name so it can't be
+      // mistaken for (or clobber) the 32-core record
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(s"BENCH_LAST_c$cpus.json"),
         (line + "\n").getBytes("UTF-8"))

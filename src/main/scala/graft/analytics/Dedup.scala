@@ -863,8 +863,6 @@ object Dedup {
     def resizeLoop(nn: Long, ne: Long): Unit = if (smallRegime) {
       val loopParts = math.max(1L, math.min(confParts,
         math.max(nn / 500000L, ne / 250000L) + 1L))
-      if (sys.env.contains("SPARK_GRAFT_LOOP_DEBUG"))
-        println(s"[contraction] nodes=$nn edges=$ne loopParts=$loopParts")
       spark.conf.set(partsKey, loopParts.toString)
     }
     if (smallRegime) spark.conf.set(aqeKey, "false")
@@ -1404,15 +1402,6 @@ object Dedup {
         noEarlierSharedBand)
       .select(col("doc_a"), col("doc_b"))
   }
-
-  /** SimHash near-dup candidate pairs, pre-distinct: a pair appears once
-    * per shared band (≤4×). This is the EXHAUSTIVE pair surface (q35's
-    * semantics: every near-dup pair, including pairs of identical texts);
-    * graph consumers use [[simhashDupGraph]] instead, which collapses
-    * exact duplicates before banding. */
-  def simhashPairsRaw(s: SparkSession, d: String, maxHamming: Int = 6): DataFrame =
-    bandPairs(simhashFingerprints(s, d).select(col("doc_id"), col("simhash")),
-      maxHamming)
 
   /**
    * The simhash near-dup graph with EXACT duplicates collapsed before

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,12 +51,8 @@ object Merge {
    * Broadcasting the batch's key set keeps the target un-shuffled when the
    * batch is small relative to the target (the common incremental case).
    */
-  def applyIncremental(target: DataFrame, batch: DataFrame, pk: Seq[String],
-      broadcastKeys: Boolean = true): DataFrame = {
-    val keys = {
-      val k = batch.select(pk.map(col).toIndexedSeq: _*).distinct()
-      if (broadcastKeys) broadcast(k) else k
-    }
+  def applyIncremental(target: DataFrame, batch: DataFrame, pk: Seq[String]): DataFrame = {
+    val keys = batchKeys(batch, pk)
     target.join(keys, pk, "left_anti").unionByName(batch.select(target.columns.map(col).toIndexedSeq: _*))
   }
 
@@ -74,11 +70,8 @@ object Merge {
    * than a shuffle.)
    */
   def applyIncrementalSeq(target: DataFrame, batch: DataFrame, pk: Seq[String],
-      seqCol: String, broadcastKeys: Boolean = true): DataFrame = {
-    val keys = {
-      val k = batch.select(pk.map(col).toIndexedSeq: _*).distinct()
-      if (broadcastKeys) broadcast(k) else k
-    }
+      seqCol: String): DataFrame = {
+    val keys = batchKeys(batch, pk)
     val untouched = target.join(keys, pk, "left_anti")
     val contested = target.join(keys, pk, "left_semi")
       .withColumn("__from_batch", lit(0))
@@ -90,13 +83,7 @@ object Merge {
     untouched.unionByName(winners)
   }
 
-  /** Volatile path: the batch IS the table (drop+recreate ⇒ overwrite). */
-  def applyVolatile(batch: DataFrame): DataFrame = batch
-
-  /**
-   * Filter condition "row's PK tuple is in the batch" — exposed for the JDBC
-   * sink's staged `DELETE FROM target WHERE (pk) IN (SELECT pk FROM stage)`.
-   */
-  def pkMatch(left: DataFrame, right: DataFrame, pk: Seq[String]): Column =
-    pk.map(k => left(k) === right(k)).reduce(_ && _)
+  /** The batch's distinct key set, broadcast so the target stays unshuffled. */
+  private def batchKeys(batch: DataFrame, pk: Seq[String]): DataFrame =
+    broadcast(batch.select(pk.map(col).toIndexedSeq: _*).distinct())
 }

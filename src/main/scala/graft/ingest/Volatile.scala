@@ -7,7 +7,7 @@ package graft.ingest
  * Verbatim list from `/root/reference/src/importer.rs:15-49`
  * (`VOLATILE_TABLES`). Config may force ALL tables volatile
  * (`settings.rs:102-105`, `config/default.toml:9-12`) — modeled by the
- * `allVolatile` flag on [[Merge.LoadMode]] decisions.
+ * `allVolatile` flag of [[isVolatile]].
  */
 object Volatile {
 

@@ -110,7 +110,7 @@ final class IngestJob(
       if (!volatileLoad)
         log.warn(s"table=$name dump_seq=$dumpSeq: no id-like primary key; " +
           "loading with volatile (drop and reload) semantics instead of a merge")
-      StagedWrite.overwriteFlat(spark, Merge.applyVolatile(batchRaw), targetPath)
+      StagedWrite.overwriteFlat(spark, batchRaw, targetPath)
       // the sink reads the table just written, not the gz a second time;
       // the declared schema skips parquet's footer-inference job
       jdbc.foreach { t =>

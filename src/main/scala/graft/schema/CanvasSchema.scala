@@ -65,9 +65,6 @@ final case class SchemaDefinition(version: String, tables: Map[String, TableDefi
       case (k, v) if k.toLowerCase == lower => v
     })
   }
-
-  def structTypes: Map[String, StructType] =
-    tables.map { case (k, v) => k -> v.toStructType }
 }
 
 object CanvasSchema {

@@ -21,11 +21,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
  * (reserved-word renames, DDL types, quoting) is unit-testable without a
  * database; `writeBatch`/`mergeBatch` wire them to a live connection.
  *
- * Scale: `numPartitions` bounds concurrent connections (reference: r2d2
- * pool defaults); `batchsize` amortizes round-trips; `DELETE+INSERT` is one
+ * Scale: `Connections` bounds concurrent connections (reference: r2d2
+ * pool defaults); `BatchRows` amortizes round-trips; `DELETE+INSERT` is one
  * statement pair per table-batch, not per row.
  */
 object JdbcSink {
+
+  /** Concurrent connections (write partitions) of one batch write. */
+  private val Connections = 8
+
+  /** Rows per JDBC insert batch. */
+  private val BatchRows = 10000
 
   final case class Dialect(kind: TypeMapping.Dialect, quote: String) {
     def ident(name: String): String = {
@@ -136,12 +142,11 @@ object JdbcSink {
 
   /** Volatile/bulk path (op I-4): batched inserts, bounded connections. */
   def writeBatch(df: DataFrame, url: String, tableName: String,
-      props: java.util.Properties, overwrite: Boolean,
-      batchSize: Int = 10000, numPartitions: Int = 8): Unit = {
-    df.repartition(numPartitions)
+      props: java.util.Properties, overwrite: Boolean): Unit = {
+    df.repartition(Connections)
       .write
       .mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
-      .option("batchsize", batchSize.toString)
+      .option("batchsize", BatchRows.toString)
       .option("isolationLevel", "READ_COMMITTED")
       .jdbc(url, tableName, props)
   }

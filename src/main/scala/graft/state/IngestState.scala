@@ -78,8 +78,8 @@ final class IngestState(spark: SparkSession, dir: String) {
     * them to the same values) or a partially-deleted old set (a subset of
     * what the compacted part already holds); state is never lost or
     * half-visible, unlike a delete-then-rename of the whole directory. */
-  private def maybeCompact(threshold: Int = CompactThreshold): Unit =
-    if (partCount() > threshold) {
+  private def maybeCompact(): Unit =
+    if (partCount() > CompactThreshold) {
       val oldParts = fs.listStatus(new Path(path))
         .map(_.getPath).filter(_.getName.endsWith(".parquet"))
       val latest = readAll()

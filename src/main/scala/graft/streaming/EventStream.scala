@@ -43,14 +43,6 @@ object EventStream {
       .select(col("window.start").as("bucket"), col("event_type"),
         col("n_events"), col("value_sum"))
 
-  /** Sliding windows: 1h window advancing every 15m. */
-  def slidingValue(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(avg(col("value")).as("avg_value"))
-      .select(col("window.start").as("bucket"), col("event_type"), col("avg_value"))
-
   /** Session windows (1h inactivity gap) per user. */
   def sessions(events: DataFrame): DataFrame =
     events

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -18,24 +17,14 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
  * job submission of the LAST pass — at sf0.1 the corpus is ~17 MB, so a
  * query whose wall is dominated by planMs is Catalyst/analysis-bound, not
  * data-bound, and the optimization lever is plan size, not shuffle bytes.
- * Mirrors Bench's session conf (local[$SPARK_GRAFT_CPUS], AQE on,
- * shuffle.partitions=cpus, codegen cache 4096).
+ * Runs in Bench's session ([[graft.LocalSession]]).
  */
 object QueryProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROF_RUNS", "2").toInt
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cpus, "query-prof")
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

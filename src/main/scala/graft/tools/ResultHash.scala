@@ -117,14 +117,7 @@ object Sf1HashPin {
     // optional: restrict to named queries (re-pin a new member without
     // re-running the whole ~20 min battery)
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(graft.LocalSession.cpus, "sf1-hash-pin")
     ResultHash.Sf1PinnedQueries
       .filter(n => only.isEmpty || only(n))
       .foreach { name =>

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.LocalSession
 import graft.analytics.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,13 +25,7 @@ object Soak1000 {
   def main(args: Array[String]): Unit = {
     val sf01 = "/root/testdata/sf0.1"
     val soakDir = "target/soak_sf100"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cpus, "soak1000")
 
     val marker = new java.io.File(s"$soakDir/documents.parquet/_SUCCESS")
     if (!marker.exists()) {

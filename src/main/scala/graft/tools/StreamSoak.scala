@@ -1,8 +1,9 @@
 package graft.tools
 
+import graft.LocalSession
 import graft.analytics.Similarity
 import graft.streaming.StreamingCorpus
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -43,18 +44,12 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val sf10 = "target/soak_sf10"
     val root = "target/soak_stream_sf10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nB = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "20").toInt
     val only = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     def want(tag: String): Boolean = only.forall(_.contains(tag))
 
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cpus, "stream-soak")
 
     require(new java.io.File(s"$sf10/documents.parquet/_SUCCESS").exists(),
       s"missing $sf10 — run graft.tools.Soak100 first")

@@ -95,10 +95,6 @@ object GraftBridge {
     n
   }
 
-  /** Outstanding (registered, not yet released) transient pins on this
-    * thread. */
-  def transientPinCount: Int = transientPins.get().size()
-
   /** Run `body`, then unpersist exactly the transient pins `body`
     * registered on this thread — pins registered BEFORE the call are
     * untouched, so an enclosing scope's frames survive. Reentrant. Used

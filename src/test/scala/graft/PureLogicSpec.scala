@@ -150,4 +150,11 @@ class PureLogicSpec extends AnyFunSuite {
     assert(!Manifest.isHistoricalRefresh(files))
     assert(!Manifest.isHistoricalRefresh(Seq.empty[ArtifactFile]))
   }
+
+  // ---- LocalSession core count -------------------------------------------
+
+  test("cpus: SPARK_GRAFT_CPUS when set, the processor count when unset") {
+    assert(LocalSession.resolveCpus(Map("SPARK_GRAFT_CPUS" -> "7")) == 7)
+    assert(LocalSession.resolveCpus(Map.empty) == Runtime.getRuntime.availableProcessors())
+  }
 }

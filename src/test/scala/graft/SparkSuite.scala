@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for test suites (one per suite, lazy). */
 trait SparkSuite { self: AnyFunSuite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4, getClass.getSimpleName)
 
   def tempDir(prefix: String): java.nio.file.Path = TempDirs.tempDir(prefix)
 }
